@@ -8,15 +8,22 @@ re-read them, and the directory is removed at interpreter exit. Local
 mode spools to the system temp dir; on a cluster the same call targets
 job-scratch storage (HDFS/S3). Decimals, longs, and strings round-trip
 parquet exactly, so spooled plans stay bit-identical.
+
+``@session_artifact`` builds on it: one memo for every frame or model a
+session's queries share, keyed, built, cached and found in one place.
 """
 
 from __future__ import annotations
 
 import atexit
+import functools
+import inspect
 import os
 import shutil
 import tempfile
+import threading
 import uuid
+from collections.abc import Callable
 
 import time
 
@@ -157,3 +164,102 @@ def graft_checkpoint(df: DataFrame) -> DataFrame:
         return df.checkpoint(eager=True)
     finally:
         df.unpersist()
+
+
+# Registered builders in definition order: a builder's inputs are defined
+# (and therefore built) before it.
+ARTIFACTS: dict[str, Callable] = {}
+_MEMO: dict[tuple, object] = {}
+_SERVED: set[str] = set()
+_LOCK = threading.Lock()
+
+
+def _snapshot_fingerprint(sf_dir: str) -> tuple:
+    """(file, mtime_ns, size) for every file of every ``*.parquet``
+    table in sf_dir — cheap os.stat metadata, no data read. A regenerated
+    fixture changes mtime/size, so a memo keyed on it never serves a
+    frame built from bytes no longer on disk. ``st_mtime_ns``, not
+    whole seconds: a same-second same-size in-place rewrite
+    (deterministic generators produce same-size output) must still
+    change the key."""
+    entries = []
+    try:
+        for table in sorted(os.listdir(sf_dir)):
+            if not table.endswith(".parquet"):
+                continue
+            p = os.path.join(sf_dir, table)
+            if os.path.isdir(p):
+                files = [os.path.join(p, f) for f in sorted(os.listdir(p))]
+            else:
+                files = [p]
+            for f in files:
+                st = os.stat(f)
+                entries.append((f, st.st_mtime_ns, st.st_size))
+    except OSError:
+        entries.append(("missing", 0, 0))
+    return tuple(entries)
+
+
+def session_artifact(name: str):
+    """Register ``fn(spark, sf_dir, *extra)`` as the session artifact
+    ``name``: the first call per key builds, every later one is served
+    from the memo.
+
+    Key = (applicationId, abspath(sf_dir), name, extra arguments bound
+    with defaults applied, snapshot fingerprint of sf_dir) — the
+    applicationId, not ``id(spark)``, which the allocator can reuse for
+    a new session after a stopped one is collected (serving a frame
+    bound to a dead JVM); the fingerprint, not the path alone, so a
+    fixture rewritten in place is rebuilt rather than served stale.
+    A miss evicts entries of other applications and of sf_dir under a
+    superseded fingerprint. A returned DataFrame is spooled; any other
+    value is stored as returned, so it must be immutable (and not
+    None). Every call
+    adds ``name`` to the served set that ``drain_served`` empties."""
+
+    def register(fn):
+        if name in ARTIFACTS:
+            raise ValueError(f"session artifact {name!r} registered twice")
+        sig = inspect.signature(fn)
+
+        @functools.wraps(fn)
+        def serve(spark, sf_dir: str, *args, **kwargs):
+            bound = sig.bind(spark, sf_dir, *args, **kwargs)
+            bound.apply_defaults()
+            app = spark.sparkContext.applicationId
+            path = os.path.abspath(sf_dir)
+            fp = _snapshot_fingerprint(path)
+            key = (app, path, name, tuple(bound.arguments.values())[2:], fp)
+            with _LOCK:
+                _SERVED.add(name)
+            value = _MEMO.get(key)
+            if value is None:
+                value = fn(spark, sf_dir, *args, **kwargs)
+                if isinstance(value, DataFrame):
+                    value = spool(value)
+                with _LOCK:
+                    for k in [
+                        k for k in _MEMO if k[0] != app or (k[1] == path and k[4] != fp)
+                    ]:
+                        del _MEMO[k]
+                    _MEMO[key] = value
+            return value
+
+        ARTIFACTS[name] = serve
+        return serve
+
+    return register
+
+
+def drain_served() -> set[str]:
+    """Names of the artifacts served since the last drain."""
+    with _LOCK:
+        served = set(_SERVED)
+        _SERVED.clear()
+    return served
+
+
+def clear_artifacts() -> None:
+    """Forget every memoized artifact (the spool files stay until exit)."""
+    with _LOCK:
+        _MEMO.clear()

@@ -42,6 +42,7 @@ from .operators.filters import dynamic as dynamic_filter
 from .operators import joins as jn
 from .operators.joins import enrich, left_unique, unmatched_keys
 from .operators.sets import union_by_name
+from .operators.spool import session_artifact
 from .operators.sorting import paginate, sorted_distinct, top_k
 from .operators.windows import (
     global_rank_scaled,
@@ -633,73 +634,37 @@ def _basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return baskets.select(F.explode(pair_structs).alias("__p")).select("__p.u", "__p.v")
 
 
-# Shared graph-family spools (VERDICT r5 #7): the five-query graph
+# Shared graph-family artifacts (VERDICT r5 #7): the five-query graph
 # shelf re-derived the SAME distinct edge set (and its symmetric,
 # degree-annotated form) per query — in a bench/sweep session that is
-# five identical basket-explode + distinct shuffles. Memoize the
-# spooled frames per (application, sf_dir): the first caller pays the
-# build, every later graph query in the session reads the parquet
-# spool. Keyed by applicationId so a restarted session can never see
-# another session's (unreadable) frames; the spool files themselves
-# are removed at interpreter exit (operators/spool.py).
-_GRAPH_SPOOL_CACHE: dict = {}
-
-
+# five identical basket-explode + distinct shuffles.
+@session_artifact("edges_uv")
 def _edges_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct co-purchase edges (u < v), spooled once per session."""
-    import os  # noqa: PLC0415
-
-    from .operators.spool import spool  # noqa: PLC0415
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), "uv")
-    df = _GRAPH_SPOOL_CACHE.get(key)
-    if df is None:
-        df = spool(_basket_pairs(spark, sf_dir).distinct())
-        _GRAPH_SPOOL_CACHE[key] = df
-    return df
+    """Distinct co-purchase edges (u < v)."""
+    return _basket_pairs(spark, sf_dir).distinct()
 
 
+@session_artifact("edges_sym_deg")
 def _edges_sym_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric distinct edges annotated with the source degree
-    (u, v, __deg of u), spooled once per session. u<v edges union
-    their swap — strict u<v means no self-loops, so the union IS the
-    symmetric distinct set without another distinct shuffle."""
-    import os  # noqa: PLC0415
-
-    from .operators.spool import spool  # noqa: PLC0415
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), "symdeg")
-    df = _GRAPH_SPOOL_CACHE.get(key)
-    if df is None:
-        e = _edges_uv(spark, sf_dir)
-        sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("__deg"))
-        df = spool(sym.join(deg, "u"))
-        _GRAPH_SPOOL_CACHE[key] = df
-    return df
+    (u, v, __deg of u). u<v edges union their swap — strict u<v means
+    no self-loops, so the union IS the symmetric distinct set without
+    another distinct shuffle."""
+    e = _edges_uv(spark, sf_dir)
+    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("__deg"))
+    return sym.join(deg, "u")
 
 
+@session_artifact("nation_week_rev")
 def _nation_week_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(nation, __wk, __rev) — weekly LINEITEM revenue per nation
-    (exact decimal sum), spooled once per (application, sf_dir): the
-    regression pair ``weekly_trend`` (OLS slope) and
-    ``changepoint_weeks`` (CUSUM peak) both reduce this identical
-    census, and each previously re-ran the lineitem⋈orders join per
-    call. Bounded |nations|·|weeks| artifact; decimals round-trip
-    parquet exactly (the `_weekly_nation_census` posture on the
-    revenue axis)."""
-    import os  # noqa: PLC0415
-
-    from .operators.spool import spool  # noqa: PLC0415
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        "nation_week_rev",
-    )
-    df = _GRAPH_SPOOL_CACHE.get(key)
-    if df is not None:
-        return df
+    (exact decimal sum): the regression pair ``weekly_trend`` (OLS
+    slope) and ``changepoint_weeks`` (CUSUM peak) both reduce this
+    identical census, and each previously re-ran the lineitem⋈orders
+    join per call. Bounded |nations|·|weeks| artifact; decimals
+    round-trip parquet exactly (the `_weekly_nation_census` posture on
+    the revenue axis)."""
     li = read_table_parallel(spark, sf_dir, "lineitem", by=("l_orderkey",)).select(
         "l_orderkey", "l_extendedprice"
     )
@@ -711,71 +676,44 @@ def _nation_week_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
     wk = F.floor(F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")) / 7).cast(
         "long"
     )
-    df = spool(
+    return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"), wk.alias("__wk"))
         .agg(dsum_dec("l_extendedprice").alias("__rev"))
     )
-    _GRAPH_SPOOL_CACHE[key] = df
-    return df
 
 
+@session_artifact("event_transition_census")
 def _event_transition_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(de, para, n, rowtot) — the first-order Markov transition census
-    over event types (per-user lag pairing), spooled once per
-    (application, sf_dir): ``event_transitions`` (the matrix) and
-    ``transition_steady_state`` (3 power iterations over it) both
-    reduce this identical ≤|types|² artifact, and each previously
-    re-ran the events lag pass per call."""
-    import os  # noqa: PLC0415
-
-    from .operators.spool import spool  # noqa: PLC0415
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        "event_transition_census",
-    )
-    df = _GRAPH_SPOOL_CACHE.get(key)
-    if df is not None:
-        return df
+    over event types (per-user lag pairing): ``event_transitions`` (the
+    matrix) and ``transition_steady_state`` (3 power iterations over
+    it) both reduce this identical ≤|types|² artifact, and each
+    previously re-ran the events lag pass per call."""
     e = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    df = spool(
+    return (
         e.withColumn("__prev", F.lag("event_type").over(w))
         .filter(F.col("__prev").isNotNull())
         .groupBy(F.col("__prev").alias("de"), F.col("event_type").alias("para"))
         .agg(F.count(F.lit(1)).alias("n"))
         .withColumn("rowtot", F.sum("n").over(Window.partitionBy("de")))
     )
-    _GRAPH_SPOOL_CACHE[key] = df
-    return df
 
 
+@session_artifact("order_spans")
 def _order_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(c_nationkey, __open, __close) — each order's open interval
-    (order date → last line's ship date, clamped so open ≤ close),
-    spooled once per (application, sf_dir): `open_order_concurrency`
-    (interval sweep) and `littles_law_audit` (the conservation audit
-    over the same sweep) both start from this identical frame, and
-    each previously re-ran the lineitem max-shipdate aggregate +
-    orders join per call. Dates round-trip parquet exactly."""
-    import os  # noqa: PLC0415
-
-    from .operators.spool import spool  # noqa: PLC0415
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        "order_spans",
-    )
-    df = _GRAPH_SPOOL_CACHE.get(key)
-    if df is not None:
-        return df
+    (order date → last line's ship date, clamped so open ≤ close):
+    `open_order_concurrency` (interval sweep) and `littles_law_audit`
+    (the conservation audit over the same sweep) both start from this
+    identical frame, and each previously re-ran the lineitem
+    max-shipdate aggregate + orders join per call. Dates round-trip
+    parquet exactly."""
     li = read_table_parallel(spark, sf_dir, "lineitem", by=("l_orderkey",))
     close = li.groupBy("l_orderkey").agg(
         F.date_trunc("day", F.max("l_shipdate")).cast("date").alias("__close")
@@ -786,7 +724,7 @@ def _order_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("day", "o_orderdate").cast("date").alias("__open"),
     )
     c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    df = spool(
+    return (
         o.join(close, o["o_orderkey"] == close["l_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
         # the synthetic feed contains ship dates BEFORE the order date;
@@ -798,95 +736,55 @@ def _order_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("__close", "__open").alias("__close"),
         )
     )
-    _GRAPH_SPOOL_CACHE[key] = df
-    return df
 
 
+@session_artifact("pair_support")
 def _pair_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent-pair census (u, v, __nuv with support ≥ 2) over order
-    baskets, spooled once per (application, sf_dir) — the Apriori L2
-    artifact shared by ``apriori_triples`` (its three sub-pair prunes)
-    and ``association_rules`` (the directed-rule base). Both previously
-    re-ran the identical basket fan-out + (u, v) count census PER CALL;
-    the artifact is support-pruned, so it stays bounded at any corpus
-    size (the Apriori downward-closure argument — at real minsup this
-    is a model artifact, not data), exactly the persisted-feature
-    posture of ``_minhash_sig8``."""
-    import os  # noqa: PLC0415
-
-    from .operators.spool import spool  # noqa: PLC0415
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        "pair_support",
+    baskets — the Apriori L2 artifact shared by ``apriori_triples``
+    (its three sub-pair prunes) and ``association_rules`` (the
+    directed-rule base). Both previously re-ran the identical basket
+    fan-out + (u, v) count census PER CALL; the artifact is
+    support-pruned, so it stays bounded at any corpus size (the Apriori
+    downward-closure argument — at real minsup this is a model
+    artifact, not data), exactly the persisted-feature posture of
+    ``_minhash_sig8``."""
+    return (
+        _basket_pairs(spark, sf_dir)
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("__nuv"))
+        .filter(F.col("__nuv") >= 2)
     )
-    df = _GRAPH_SPOOL_CACHE.get(key)
-    if df is None:
-        df = spool(
-            _basket_pairs(spark, sf_dir)
-            .groupBy("u", "v")
-            .agg(F.count(F.lit(1)).alias("__nuv"))
-            .filter(F.col("__nuv") >= 2)
-        )
-        _GRAPH_SPOOL_CACHE[key] = df
-    return df
 
 
+@session_artifact("doc_clusters")
 def _doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster labels for the documents table — the SHARED
-    artifact of the dedup shelf (same memoization pattern as
-    `_edges_uv`): `dedup_clusters` runs a spooled O(log n) fixpoint,
-    and three queries (dedup_clusters, dedup_survivors,
-    cluster_safe_split) need the identical (doc_id, cluster) frame, so
-    the first caller in a session pays the fixpoint and the rest read
-    the spool. Keyed by applicationId like the graph spools."""
-    import os  # noqa: PLC0415
-
-    from .operators.spool import spool  # noqa: PLC0415
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        "doc_clusters",
-    )
-    df = _GRAPH_SPOOL_CACHE.get(key)
-    if df is None:
-        df = spool(dd.dedup_clusters(_docs_parallel(spark, sf_dir), "text", "doc_id"))
-        _GRAPH_SPOOL_CACHE[key] = df
-    return df
+    artifact of the dedup shelf: `dedup_clusters` runs a spooled
+    O(log n) fixpoint, and three queries (dedup_clusters,
+    dedup_survivors, cluster_safe_split) need the identical
+    (doc_id, cluster) frame."""
+    return dd.dedup_clusters(_docs_parallel(spark, sf_dir), "text", "doc_id")
 
 
+@session_artifact("minhash_sig8")
 def _minhash_sig8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 8-hash MinHash signature + shingle frame over documents
-    (doc_id, __sh, mh0..mh7), spooled once per (application, sf_dir) —
-    the shared artifact of the 8-hash near-dup shelf: three queries
-    (`banding_recall_audit`, `near_dup_jaccard_banded`,
-    `edit_distance_near_dup`) band over the IDENTICAL signatures, and
-    the first two also verify on the identical shingle sets, so the
-    first caller pays the one shingle+md5 scan and the rest read the
-    spool (`_doc_clusters` memoization pattern, keyed by
-    applicationId). At 100 TB this IS the persisted feature-index
-    posture (`incremental_near_dups`' index_features): signatures band,
+    (doc_id, __sh, mh0..mh7) — the shared artifact of the 8-hash
+    near-dup shelf: three queries (`banding_recall_audit`,
+    `near_dup_jaccard_banded`, `edit_distance_near_dup`) band over the
+    IDENTICAL signatures, and the first two also verify on the
+    identical shingle sets, so one shingle+md5 scan serves them all.
+    At 100 TB this IS the persisted feature-index posture
+    (`incremental_near_dups`' index_features): signatures band,
     shingles verify, text itself never re-scanned per query."""
-    import os  # noqa: PLC0415
-
-    from .operators.spool import spool  # noqa: PLC0415
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), "mh8_sh")
-    df = _GRAPH_SPOOL_CACHE.get(key)
-    if df is None:
-        df = spool(
-            dd.minhash_signature(
-                _docs_parallel(spark, sf_dir),
-                "text",
-                "doc_id",
-                8,
-                keep_shingles=True,
-            )
-        )
-        _GRAPH_SPOOL_CACHE[key] = df
-    return df
+    return dd.minhash_signature(
+        _docs_parallel(spark, sf_dir),
+        "text",
+        "doc_id",
+        8,
+        keep_shingles=True,
+    )
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5476,42 +5374,32 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one map pass; rounds beyond a handful would spool the merged
     corpus instead of re-deriving the replace chain lazily.
     """
-    merges = _bpe_top_merges(spark, sf_dir, n_rounds=3)
+    merges = _bpe_top_merges(spark, sf_dir)
     return spark.createDataFrame(merges, "round INT, pair STRING, freq BIGINT")
 
 
+# Merge rounds the shipped tokenizer trains (one value in use).
+BPE_ROUNDS = 3
+
+
+@session_artifact("bpe_merges")
 def _bpe_top_merges(
-    spark: SparkSession, sf_dir: str, n_rounds: int = 3
-) -> list[tuple[int, str, int]]:
+    spark: SparkSession, sf_dir: str
+) -> tuple[tuple[int, str, int], ...]:
     """The BPE training loop shared by ``bpe_merges`` (emits the merge
     table), ``bpe_apply`` (applies it) and ``bpe_fertility`` (the lang
     census over the application): each round counts adjacent word pairs
     corpus-wide, collects the ONE winning (pair, freq) row, and fuses
     it map-side for the next round.
 
-    The merge table is MEMOIZED per (application, sf_dir, n_rounds) —
-    the `_GRAPH_SPOOL_CACHE` session-artifact posture applied to a
-    driver-side model artifact: a tokenizer trains ONCE and every
+    A driver-side model artifact: a tokenizer trains ONCE and every
     consumer applies the shipped table, while the per-call shape ran
     the 3-round count loop (3 corpus-wide aggregations) once per
-    consumer per run. The build is charged to its own
-    `spool_build_seconds` line item in bench.py like every shared
-    artifact, so per-query numbers stay warm-plan-only."""
-    import os  # noqa: PLC0415
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        "bpe_merges",
-        n_rounds,
-    )
-    cached = _GRAPH_SPOOL_CACHE.get(key)
-    if cached is not None:
-        return cached
+    consumer per run."""
     d = _docs_parallel(spark, sf_dir).filter(F.col("text").isNotNull())
     cur = d.select(F.concat(F.lit(" "), F.col("text"), F.lit(" ")).alias("t"))
     merges: list[tuple[int, str, int]] = []
-    for r in range(n_rounds):
+    for r in range(BPE_ROUNDS):
         tk = F.split(F.trim(F.col("t")), " ")
         grams = F.when(
             F.size(tk) >= 2,
@@ -5542,9 +5430,7 @@ def _bpe_top_merges(
     # Immutable artifact (ADVICE r10): a consumer mutating the returned
     # list would silently corrupt the shared session cache for every
     # later consumer — store and return a tuple.
-    frozen = tuple(merges)
-    _GRAPH_SPOOL_CACHE[key] = frozen
-    return frozen
+    return tuple(merges)
 
 
 def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5560,7 +5446,7 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both engines use leftmost non-overlapping replace on space-padded
     text, so fusions land identically.
     """
-    merges = _bpe_top_merges(spark, sf_dir, n_rounds=3)
+    merges = _bpe_top_merges(spark, sf_dir)
     d = _docs_parallel(spark, sf_dir).filter(F.col("text").isNotNull())
     t = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
     for _, pair, _freq in merges:
@@ -6258,64 +6144,13 @@ def q_contract_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("passes", F.col("n_violations") == 0)
 
 
-_PQ_CODES_SPOOL: dict[tuple[str, str, tuple], DataFrame] = {}
-
-
-def _snapshot_fingerprint(sf_dir: str, table: str = "embeddings") -> tuple:
-    """(path, mtime_ns, size) of a snapshot's parquet payload — cheap
-    os.stat metadata, no data read. A regenerated fixture changes
-    mtime/size, so memo entries keyed on it can never serve codes for
-    bytes that are no longer on disk. ``st_mtime_ns``, not whole
-    seconds: a same-second same-size in-place rewrite (deterministic
-    generators produce same-size output) must still change the key —
-    the same reasoning ``_staged_snapshot_paths`` documents."""
-    import os  # noqa: PLC0415
-
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    entries = []
-    try:
-        if os.path.isdir(p):
-            for name in sorted(os.listdir(p)):
-                st = os.stat(os.path.join(p, name))
-                entries.append((name, st.st_mtime_ns, st.st_size))
-        else:
-            st = os.stat(p)
-            entries.append((os.path.basename(p), st.st_mtime_ns, st.st_size))
-    except OSError:
-        entries.append(("missing", 0, 0))
-    return tuple(entries)
-
-
+@session_artifact("pq_codes")
 def _pq_codes_spooled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The encoded-codes artifact, memoized per (session, snapshot):
-    'encode once per snapshot' IS the PQ-index semantic — repeat
-    serving calls must reuse the materialization, not re-run the
-    argmin (at 100 TB the codes are columns written at ingest).
-
-    Key = (applicationId, sf_dir, snapshot fingerprint) — NOT
-    ``id(spark)``, which the allocator can reuse after a stopped
-    session is garbage-collected (serving a frame bound to a dead
-    JVM), and not the path alone, which would serve stale codes after
-    a fixture regenerates in place."""
-    from .operators.spool import spool
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _snapshot_fingerprint(sf_dir),
-    )
-    if key not in _PQ_CODES_SPOOL:
-        # Evict frames bound to other (possibly stopped) sessions and
-        # superseded fingerprints of THIS snapshot dir; keep live
-        # same-session indexes for other snapshots.
-        for k in [
-            k
-            for k in _PQ_CODES_SPOOL
-            if k[0] != key[0] or k[1] == sf_dir
-        ]:
-            del _PQ_CODES_SPOOL[k]
-        _PQ_CODES_SPOOL[key] = spool(q_pq_codes(spark, sf_dir))
-    return _PQ_CODES_SPOOL[key]
+    """The encoded-codes artifact: 'encode once per snapshot' IS the
+    PQ-index semantic — repeat serving calls must reuse the
+    materialization, not re-run the argmin (at 100 TB the codes are
+    columns written at ingest)."""
+    return q_pq_codes(spark, sf_dir)
 
 
 def q_pq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10962,33 +10797,28 @@ def _hb_sym_edges(spark: SparkSession, sf_dir: str):
     return sym, sym.unionAll(nodes.select("src", F.col("src").alias("dst")))
 
 
+@session_artifact("hb_ws")
+def _hb_ws(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The self-looped symmetric edge list every HyperBall round
+    joins against."""
+    return _hb_sym_edges(spark, sf_dir)[1]
+
+
+@session_artifact("hb_round")
+def _hb_round(spark: SparkSession, sf_dir: str, r: int = 4) -> DataFrame:
+    """Packed HyperBall registers after round r — VERDICT r5 #7's
+    spool reuse across the HyperBall pair: ``hyperball_2hop`` needs
+    rounds 1–2, ``neighborhood_function`` rounds 1–4, so the second
+    query reuses the first's rounds and pays only the increment.
+    Incremental by construction: round r merges round r−1. The default
+    r is the deepest round a consumer reads, so building the registry
+    prebuilds every round."""
+    ws = _hb_ws(spark, sf_dir)
+    return _hb_b1(ws) if r == 1 else _hb_merge_round(ws, _hb_round(spark, sf_dir, r - 1))
+
+
 def _hb_round_regs(spark: SparkSession, sf_dir: str, upto: int) -> list:
-    """Packed HyperBall register tables for rounds 1..upto, each
-    spooled ONCE per (application, sf_dir) — VERDICT r5 #7's
-    spool-reuse across the HyperBall pair: ``hyperball_2hop`` needs
-    rounds 1–2, ``neighborhood_function`` rounds 1–4; in a bench or
-    sweep session the second query reuses the first's rounds and pays
-    only the increment. Incremental by construction (round r merges
-    round r−1), so asking for more rounds later extends the cache."""
-    import os  # noqa: PLC0415
-
-    from .operators.spool import spool  # noqa: PLC0415
-
-    app = spark.sparkContext.applicationId
-    sf = os.path.abspath(sf_dir)
-    ws = _GRAPH_SPOOL_CACHE.get((app, sf, "hb_ws"))
-    if ws is None:
-        _, ws = _hb_sym_edges(spark, sf_dir)
-        ws = spool(ws)
-        _GRAPH_SPOOL_CACHE[(app, sf, "hb_ws")] = ws
-    rounds: list = []
-    for r in range(1, upto + 1):
-        b = _GRAPH_SPOOL_CACHE.get((app, sf, "hb_round", r))
-        if b is None:
-            b = spool(_hb_b1(ws) if r == 1 else _hb_merge_round(ws, rounds[-1]))
-            _GRAPH_SPOOL_CACHE[(app, sf, "hb_round", r)] = b
-        rounds.append(b)
-    return rounds
+    return [_hb_round(spark, sf_dir, r) for r in range(1, upto + 1)]
 
 
 def _hb_b1(with_self) -> DataFrame:
@@ -11318,12 +11148,12 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     each ONE floor division of exact basket counts (N = total
     baskets; products bounded well under 2⁶³). One fact shuffle for
     the pair census (the expression-side basket fan-out), item counts
-    ride a second census, both attach by broadcast (item/pair tables
-    are support-pruned, the Apriori boundedness argument); the total
-    is a broadcast one-rower. Top-20 by (lift desc, antecedent,
+    ride a second census — one row per part, so it grows with the data
+    and its attach is left to the size-checked planner; the total is a
+    broadcast one-rower. Top-20 by (lift desc, antecedent,
     consequent) under a total order.
     """
-    # item and pair censuses are SPOOLED (both support-bounded): the
+    # item and pair censuses are SPOOLED: the
     # two directed-rule branches and the two item-side attaches
     # otherwise each re-ran their fact scan — lineitem is now read
     # three times (basket count, item census, pair fan-out) instead
@@ -11355,8 +11185,8 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ia = items.select(F.col("l_partkey").alias("antecedent"), F.col("__ni").alias("__na"))
     ic = items.select(F.col("l_partkey").alias("consequent"), F.col("__ni").alias("__nc"))
     return (
-        directed.join(F.broadcast(ia), "antecedent")
-        .join(F.broadcast(ic), "consequent")
+        directed.join(ia, "antecedent")
+        .join(ic, "consequent")
         .crossJoin(F.broadcast(n_baskets))
         .select(
             "antecedent",
@@ -12377,6 +12207,7 @@ def q_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_artifact("nation_week_census")
 def _weekly_nation_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(nation, wk, n_orders, cents) — the shared bounded census six
     queries run on (`kendall_tau`, `spearman_corr`,
@@ -12384,31 +12215,18 @@ def _weekly_nation_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     `theilsen_trend`). One fact shuffle; axis = calendar weeks × 25
     nations, flat in order volume.
 
-    SPOOLED once per (application, sf_dir) — r10-opt: six consumers ×
-    two bench runs re-ran the identical orders scan + two broadcast
-    joins + census shuffle twelve times per capture for a bounded
-    |nations|·|weeks| artifact; the `_pair_support` posture applies
-    verbatim (bigint cents round-trip parquet exactly). Charged as its
-    own spool_build_seconds line item in bench.py."""
-    import os  # noqa: PLC0415
-
-    from .operators.spool import spool  # noqa: PLC0415
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        "nation_week_census",
-    )
-    df = _GRAPH_SPOOL_CACHE.get(key)
-    if df is not None:
-        return df
+    r10-opt: six consumers × two bench runs re-ran the identical orders
+    scan + two broadcast joins + census shuffle twelve times per
+    capture for a bounded |nations|·|weeks| artifact; the
+    `_pair_support` posture applies verbatim (bigint cents round-trip
+    parquet exactly)."""
     o = read_table(spark, sf_dir, "orders")
     wk = F.floor(
         F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")) / 7
     ).cast("long")
     c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    df = spool(
+    return (
         o.join(c, o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
         .groupBy(F.col("n_name").alias("nation"), wk.alias("wk"))
@@ -12419,8 +12237,6 @@ def _weekly_nation_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents"),
         )
     )
-    _GRAPH_SPOOL_CACHE[key] = df
-    return df
 
 
 def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13607,9 +13423,11 @@ def q_join_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All counts are exact integers from counting joins (the
     intermediate is COUNTED, never materialized wide — a count-only
-    aggregate over the join keys). One scan per arm over broadcast
-    dims; finals are asserted equal across plans in tests (join order
-    can't change the answer, only the work).
+    aggregate over the join keys). One scan per arm; only nation is
+    hinted to broadcast — customer⋈nation grows with the data, so the
+    size-checked planner decides that side. Finals are asserted equal
+    across plans in tests (join order can't change the answer, only
+    the work).
     """
     o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
@@ -13620,16 +13438,14 @@ def q_join_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oc = o.join(c, o["o_custkey"] == c["c_custkey"])
     ofc = of.join(c, of["o_custkey"] == c["c_custkey"])
     cn = c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-    ofcn = of.join(
-        F.broadcast(cn), of["o_custkey"] == cn["c_custkey"]
-    )
+    ofcn = of.join(cn, of["o_custkey"] == cn["c_custkey"])
     arms = [
         ("fact_first_late_filter", oc, oc.filter(F.col("o_orderstatus") == "F")
          .join(F.broadcast(n), F.col("c_nationkey") == n["n_nationkey"])),
         ("fact_first_pushed", ofc, ofc.join(
             F.broadcast(n), F.col("c_nationkey") == n["n_nationkey"])),
         ("dim_first_late_filter", cn, o.join(
-            F.broadcast(cn), o["o_custkey"] == cn["c_custkey"])
+            cn, o["o_custkey"] == cn["c_custkey"])
          .filter(F.col("o_orderstatus") == "F")),
         ("dim_first_pushed", cn, ofcn),
     ]
@@ -14709,6 +14525,16 @@ def q_weekly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_artifact("symdeg_nodes")
+def _symdeg_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(u, __deg), one row per node — a SPOOLED artifact (r10-opt):
+    it feeds three ``link_prediction`` plan subtrees (seed top-k, both
+    degree attaches), and unspooled Spark re-ran the edge-list distinct
+    per reference — 12 spool scans / 3 distinct aggregations in the
+    before plan (plans/r10, no ReusedExchange)."""
+    return _edges_sym_deg(spark, sf_dir).select("u", "__deg").distinct()
+
+
 def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seed-based common-neighbor link prediction over the
     co-purchase graph — the graph family's PREDICTION task (PageRank
@@ -14734,26 +14560,8 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, degree attach, per-seed top-3 window on the bounded
     census. Jaccard ppm is one truncating division per pair.
     """
-
-    import os  # noqa: PLC0415
-
-    from .operators.spool import spool  # noqa: PLC0415
-
-    edges_deg = _edges_sym_deg(spark, sf_dir)
-    edges = edges_deg.select("u", "v")
-    # The (node, degree) frame is SPOOLED (r10-opt): it fed three plan
-    # subtrees (seed top-k, both degree attaches) and Spark re-ran the
-    # edge-list distinct per reference — 12 spool scans / 3 distinct
-    # aggregations in the before plan (plans/r10, no ReusedExchange).
-    # Session-memoized (ADVICE r10): same (applicationId, sf_dir)
-    # posture as every other spool artifact, so repeat invocations stop
-    # paying a fresh parquet write+read of the identical bounded frame.
-    _app = spark.sparkContext.applicationId
-    _sfk = os.path.abspath(sf_dir)
-    deg = _GRAPH_SPOOL_CACHE.get((_app, _sfk, "symdeg_nodes"))
-    if deg is None:
-        deg = spool(edges_deg.select("u", "__deg").distinct())
-        _GRAPH_SPOOL_CACHE[(_app, _sfk, "symdeg_nodes")] = deg
+    edges = _edges_sym_deg(spark, sf_dir).select("u", "v")
+    deg = _symdeg_nodes(spark, sf_dir)
     # seeds CARRY their degree, so the __da attach needs no third deg
     # subtree.
     seeds = deg.orderBy(F.col("__deg").desc(), "u").limit(20).select(
@@ -16147,6 +15955,7 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
+@session_artifact("obs_customer_frame")
 def _obs_customer_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer observational frame for the causal-adjustment pair
     (``ipw_ate`` / ``mantel_haenszel``): exposure t = ordered in the
@@ -16159,29 +15968,16 @@ def _obs_customer_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer left-joined on custkey (order-less customers stay as
     untreated zeros) with the groupBy riding the same key; date
     bounds are string-literal NTZ comparisons (wall-clock, tz-safe).
-    Session-memoized via the `_doc_clusters` spool pattern: both
-    causal queries need the identical per-customer frame, so the
-    first caller pays the orders scan and the second reads the spool.
+    A session artifact: both causal queries need the identical
+    per-customer frame.
     """
-    import os  # noqa: PLC0415
-
-    from .operators.spool import spool  # noqa: PLC0415
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        "obs_customer_frame",
-    )
-    cached = _GRAPH_SPOOL_CACHE.get(key)
-    if cached is not None:
-        return cached
     c = read_table(spark, sf_dir, "customer").select("c_custkey")
     o = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
     cents = (F.col("o_totalprice").cast(MONEY) * 100).cast("long")
     late = F.col("o_orderdate") >= F.lit("2001-01-01")
-    frame = (
+    return (
         c.join(o, c["c_custkey"] == o["o_custkey"], "left")
         .groupBy("c_custkey")
         .agg(
@@ -16206,9 +16002,6 @@ def _obs_customer_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             "__y2",
         )
     )
-    df = spool(frame)
-    _GRAPH_SPOOL_CACHE[key] = df
-    return df
 
 
 def q_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:

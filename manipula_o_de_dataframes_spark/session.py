@@ -41,18 +41,22 @@ def _default_driver_mem() -> str:
         return "2g"
 
 
+def graft_cpus() -> int:
+    """Local parallelism: ``SPARK_GRAFT_CPUS`` (driver contract), else
+    the cores this process may use — what ``nproc`` reports, so a run
+    is never stamped with, or scheduled on, cores the machine lacks."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "manipula_o_de_dataframes_spark",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's defaults.
-
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (driver contract).
-    """
+    """Build (or reuse) a SparkSession with the engine's defaults."""
     import tempfile  # noqa: PLC0415
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    parts = str(shuffle_partitions or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = graft_cpus()
+    parts = str(shuffle_partitions or cpus)
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

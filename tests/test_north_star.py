@@ -774,7 +774,7 @@ def test_bpe_apply_fuses_trained_merges(spark, tmp_path):
         [(1, "x y x y", "en", "a", 7), (2, "x y z", "en", "a", 5)],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    assert [(p, f) for _, p, f in _bpe_top_merges(spark, str(tmp_path), 3)] == [
+    assert [(p, f) for _, p, f in _bpe_top_merges(spark, str(tmp_path))] == [
         ("x y", 3), ("x y", 1), ("x+y x+y", 1)
     ]
     rows = {r["doc_id"]: r for r in QUERIES["bpe_apply"](
@@ -906,6 +906,7 @@ def test_pq_recall_perfect_on_centroid_corpus(spark, tmp_path):
     # Vectors that ARE codebook reconstructions quantize losslessly, so
     # ADC ordering == exact ordering and recall@k is perfect.
     from manipula_o_de_dataframes_spark import queries as Q
+    from manipula_o_de_dataframes_spark.operators.spool import clear_artifacts
 
     cb = sim.pq_codebook()
 
@@ -920,9 +921,9 @@ def test_pq_recall_perfect_on_centroid_corpus(spark, tmp_path):
     ]
     spark.createDataFrame(rows, "vec_id long, embedding array<float>")\
         .write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    Q._PQ_CODES_SPOOL.clear()
+    clear_artifacts()
     out = Q.QUERIES["pq_recall"](spark, str(tmp_path)).collect()[0]
-    Q._PQ_CODES_SPOOL.clear()
+    clear_artifacts()
     assert out["k"] == 20 and out["n_hits"] == 20 and out["recall_ppm"] == 1000000
 
 
@@ -1153,34 +1154,53 @@ def test_containment_dominates_jaccard_on_random_docs(spark):
     check()
 
 
-def test_pq_spool_memo_invalidates_on_snapshot_change(spark, tmp_path):
-    """The codes memo keys on (applicationId, dir, snapshot
-    fingerprint) — rewriting the embeddings parquet in place must
-    re-encode, never serve the dead snapshot's codes (ADVICE r4:
-    id(spark) could be reused after GC and the old key ignored
-    in-place fixture rewrites entirely)."""
+def _write_embeddings(spark, path, seed):
+    rows = [
+        (i, [((i * 13 + j * 7 + seed) % 11 - 5) / 5.0 for j in range(64)])
+        for i in range(6)
+    ]
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>")\
+        .write.mode("overwrite").parquet(str(path / "embeddings.parquet"))
+
+
+def _write_events(spark, path, seed):
+    import datetime as dt
+
+    types = ["click", "view", "purchase"]
+    rows = [
+        (i, i % 2, dt.datetime(2024, 1, 1, 0, i), types[(i // (seed + 1)) % 3], 1.0)
+        for i in range(12)
+    ]
+    spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp, event_type string, value double"
+    ).write.mode("overwrite").parquet(str(path / "events.parquet"))
+
+
+@pytest.mark.parametrize(
+    "artifact, write",
+    [
+        pytest.param("_pq_codes_spooled", _write_embeddings, id="pq_codes"),
+        pytest.param("_event_transition_census", _write_events, id="event_transition_census"),
+    ],
+)
+def test_pq_spool_memo_invalidates_on_snapshot_change(spark, tmp_path, artifact, write):
+    """Session artifacts key on (applicationId, dir, snapshot
+    fingerprint) — rewriting a table in place must rebuild, never
+    serve the dead snapshot's frame (ADVICE r4: id(spark) could be
+    reused after GC and a path-only key ignored in-place fixture
+    rewrites entirely)."""
     import manipula_o_de_dataframes_spark.queries as Q
 
-    cb = sim.pq_codebook()
-
-    def write(seed):
-        rows = [
-            (i, [((i * 13 + j * 7 + seed) % 11 - 5) / 5.0 for j in range(64)])
-            for i in range(6)
-        ]
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>"
-        ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-
-    write(0)
-    first = Q._pq_codes_spooled(spark, str(tmp_path))
-    again = Q._pq_codes_spooled(spark, str(tmp_path))
+    build = getattr(Q, artifact)
+    write(spark, tmp_path, 0)
+    first = build(spark, str(tmp_path))
+    again = build(spark, str(tmp_path))
     assert first is again, "same snapshot must reuse the memoized frame"
     rows1 = {tuple(r) for r in first.collect()}
 
-    write(3)  # st_mtime_ns keying: no same-second blind window
-    second = Q._pq_codes_spooled(spark, str(tmp_path))
-    assert second is not first, "rewritten snapshot must re-encode"
+    write(spark, tmp_path, 3)  # st_mtime_ns keying: no same-second blind window
+    second = build(spark, str(tmp_path))
+    assert second is not first, "rewritten snapshot must rebuild"
     assert {tuple(r) for r in second.collect()} != rows1
 
 

@@ -9,7 +9,7 @@ burst, record in SURVEY; reproduces => rewrite.
 
 Usage: python tools/isolated_retime.py <query> [<query> ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-       SPARK_GRAFT_CPUS   (default 32).
+       SPARK_GRAFT_CPUS   (default: the cores this process may use).
 Run one query per process for true isolation; multiple names share a
 session (still useful, but the first pays any residual warmup).
 """
@@ -25,22 +25,8 @@ _REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO_DIR not in sys.path:
     sys.path.insert(0, _REPO_DIR)
 
-from manipula_o_de_dataframes_spark.queries import (  # noqa: E402
-    QUERIES,
-    _doc_clusters,
-    _edges_sym_deg,
-    _event_transition_census,
-    _edges_uv,
-    _hb_round_regs,
-    _minhash_sig8,
-    _nation_week_rev,
-    _obs_customer_frame,
-    _order_spans,
-    _bpe_top_merges,
-    _pair_support,
-    _weekly_nation_census,
-    _pq_codes_spooled,
-)
+from manipula_o_de_dataframes_spark.operators.spool import ARTIFACTS  # noqa: E402
+from manipula_o_de_dataframes_spark.queries import QUERIES  # noqa: E402
 from manipula_o_de_dataframes_spark.session import get_spark  # noqa: E402
 
 
@@ -58,21 +44,7 @@ def main() -> None:
 
     materialize(QUERIES["abc_classification"](spark, "/root/testdata/sf0.001"))
     materialize(QUERIES["multimodal_features"](spark, "/root/testdata/sf0.001"))
-    for build in (
-        _edges_uv,
-        _edges_sym_deg,
-        _event_transition_census,
-        lambda s, d: _hb_round_regs(s, d, 4),
-        _doc_clusters,
-        _minhash_sig8,
-        _nation_week_rev,
-        _pq_codes_spooled,
-        _bpe_top_merges,
-        _pair_support,
-        _weekly_nation_census,
-        _obs_customer_frame,
-        _order_spans,
-    ):
+    for build in ARTIFACTS.values():
         build(spark, sf_dir)
 
     for name in names:
