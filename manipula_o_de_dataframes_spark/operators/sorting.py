@@ -2,15 +2,16 @@
 
 Pagination needs a *stable total order* — pandas paged on its implicit
 row index (MAC:512-516); Spark has no index, so ``paginate`` demands an
-explicit unique ordering. Implemented with row_number over that order:
-one global sort of the (already filtered, usually small) serving frame.
-``offset().limit()`` (Spark ≥3.4) is the alternative; row_number keeps
-the page computation expressible in the ANSI oracle too.
+explicit unique ordering. A page is ``top_k`` of ``hi`` rows minus the
+first ``lo``: one TakeOrderedAndProject whose merge sees partitions × hi
+rows (Spark falls back to sort + limit past its own
+``spark.sql.execution.topKSortFallbackThreshold``). The DuckDB oracle
+keeps ROW_NUMBER as the page's independent definition.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -41,12 +42,9 @@ def paginate(df: DataFrame, order_by: list, page: int, page_size: int) -> DataFr
 
     Reference: df.iloc[(p-1)*n : p*n] (MAC:512-516), which leaned on the
     pandas row index; here the caller's ``order_by`` must be a total
-    order for pages to be disjoint and reproducible.
+    order for pages to be disjoint and reproducible. A row_number window
+    sorts the whole frame on one task once ``hi`` passes the optimizer's
+    ``spark.sql.optimizer.windowGroupLimitThreshold``; the top-k does not.
     """
-    w = Window.orderBy(*order_by)
     lo, hi = (page - 1) * page_size, page * page_size
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") > lo) & (F.col("__rn") <= hi))
-        .drop("__rn")
-    )
+    return top_k(df, order_by, hi).offset(lo)

@@ -3271,7 +3271,8 @@ def q_dashboard_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dashboard_page(hist: DataFrame) -> DataFrame:
     """The per-interaction serve plan over a (possibly cached) history
     frame — shared by q_dashboard_serve (cold) and bench.py's warm
-    variant, so both time the identical plan."""
+    variant, so both time the identical plan: filter, then page 2 as one
+    bounded TakeOrderedAndProject(limit=100, offset=50)."""
     filtered = dynamic_filter(hist, {"ultimo_consultor": "R"})
     order = [F.col("n_interacoes").desc(), F.col("produto"), F.col("cliente")]
     return paginate(filtered, order, page=2, page_size=50)

@@ -167,6 +167,30 @@ def test_paginate_pages_are_disjoint_and_ordered(spark):
     assert p4 == set(range(90, 100))  # last partial page
 
 
+def test_paginate_concatenates_to_the_total_order(spark):
+    """Pages 1..k over 7 partitions under (g DESC, id) — a total order
+    only through its tie-break — are pairwise disjoint and, in order,
+    rebuild the sorted list the oracles' ROW_NUMBER window defines; the
+    last page may be partial, a page past the end is empty."""
+    rows = [(i % 4, i) for i in range(23)]
+    df = spark.createDataFrame(rows, "g long, id long").repartition(7)
+    order = [F.col("g").desc(), F.col("id")]
+    expected = sorted(rows, key=lambda r: (-r[0], r[1]))
+    for size in (1, 7):
+        n_pages = -(-len(rows) // size)
+        pages = [
+            [tuple(r) for r in paginate(df, order, p, size).collect()]
+            for p in range(1, n_pages + 2)
+        ]
+        *full, last, past_end = pages
+        assert all(len(p) == size for p in full)
+        assert len(last) == len(rows) - size * (n_pages - 1)
+        assert past_end == []
+        flat = [r for p in pages for r in p]
+        assert len(set(flat)) == len(flat)  # pairwise disjoint
+        assert flat == expected
+
+
 def test_results_invariant_under_shuffle_partitioning(spark):
     """The determinism rules must make results identical under ANY
     partitioning — the distributed-correctness claim. Re-run three

@@ -605,6 +605,39 @@ def test_keyset_page_seek_pushes_down_and_takeordered(spark):
     assert "Exchange" not in plan, f"seek page must not shuffle\n{plan}"
 
 
+def test_pages_plan_as_bounded_top_k(spark):
+    """Offset pagination is a bounded top-k: each partition keeps a heap
+    of ``hi`` rows and the merge sees partitions × ``hi`` — never a
+    row_number window, whose plan sorts the whole frame on one task once
+    ``hi`` passes the optimizer's window-group-limit threshold."""
+    from manipula_o_de_dataframes_spark.operators.sorting import paginate
+    from manipula_o_de_dataframes_spark.queries import (
+        QUERIES,
+        dashboard_page,
+        product_client_history,
+    )
+
+    hist = product_client_history(spark, SF_SMOKE).cache()
+    try:
+        # the serve plan only: the cached history's own build plan is
+        # printed under InMemoryRelation
+        served = _plan(dashboard_page(hist)).split("InMemoryRelation")[0]
+    finally:
+        hist.unpersist()
+    # hi = 2000, past the default windowGroupLimitThreshold of 1000
+    deep = paginate(
+        read_table(spark, SF_SMOKE, "orders"),
+        [F.col("o_totalprice").desc(), F.col("o_orderkey")],
+        page=40,
+        page_size=50,
+    )
+    orders_page = _plan(QUERIES["paginate_orders"](spark, SF_SMOKE))
+    for plan in (orders_page, served, _plan(deep)):
+        assert re.search(r"TakeOrderedAndProject\(limit=\d+, offset=\d+", plan), plan
+        assert "Window" not in plan, plan
+        assert "Exchange SinglePartition" not in plan, plan
+
+
 def test_maxsim_plan_broadcasts_probe_and_stays_jvm(spark):
     """ColBERT serving shape: probe chunks broadcast, doc chunk
     features map-side, shuffles carry only (doc, q_idx, max) tuples —

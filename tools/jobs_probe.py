@@ -29,10 +29,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     tracker = spark.sparkContext.statusTracker()
 
-    # warm-up pays JVM/codegen once
-    QUERIES[names[0]](spark, "/root/testdata/sf0.001").write.mode(
-        "overwrite"
-    ).format("noop").save()
+    # untimed warm-up on the measured directory pays JVM/codegen once; a
+    # missing sf_dir fails here instead of warming up on another fixture
+    QUERIES[names[0]](spark, sf_dir).write.mode("overwrite").format("noop").save()
 
     rows = []
     for name in names:
