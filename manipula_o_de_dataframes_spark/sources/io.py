@@ -90,16 +90,6 @@ def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: read_table(spark, sf_dir, n) for n in (names or TPCH_TABLES)}
 
 
-def _cell_str(v) -> str | None:
-    """Render a mixed-type cell for a string column — delegated to
-    ``xlsx_lite.cell_str`` (moved there with the table-inference
-    helpers so the distributed reader's executor closure pickles by
-    value; see ``xlsx_lite.infer_table``)."""
-    from . import xlsx_lite  # noqa: PLC0415
-
-    return xlsx_lite.cell_str(v)
-
-
 def read_excel(
     spark: SparkSession,
     path: str,
@@ -531,38 +521,6 @@ def read_csv_quarantine(
         F.col("_corrupt_record").alias("raw_line")
     )
     return good, quarantine
-
-
-def write_bucketed_table(
-    spark: SparkSession,
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 8,
-) -> None:
-    """Persist ``df`` as a BUCKETED (and bucket-sorted) managed table —
-    the layout that makes repeated co-keyed joins/aggregations
-    shuffle-free: every reader sees an output partitioning of
-    ``hashpartitioning(bucket_col, n_buckets)``, so a join of two
-    tables bucketed the same way satisfies both sides'
-    ClusteredDistribution with ZERO Exchange in the plan (proven by
-    tests/test_wrappers.py::test_bucketed_join_is_shuffle_free).
-
-    This is the repo's substantiation for every "at a real deployment
-    both sides are bucketed on the key → the shuffle disappears"
-    docstring claim: the 100 TB pattern is to pay the fact table's
-    shuffle ONCE at ingest (this write), then run every downstream
-    orderkey join against free co-location. Uses Spark's built-in
-    catalog (no Hive required); ``sortBy`` additionally enables
-    merge-join without a per-task sort.
-    """
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .format("parquet")
-        .saveAsTable(table)
-    )
 
 
 def write_orc(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> None:

@@ -17,28 +17,22 @@ same documented trade as every other drain in this package).
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .joins import _events_stream, drain_shuffle_partitions
+from .drain import drain, link_deliveries
+from .joins import _events_stream
 
 
 def drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from ..queries import _drift_from_counts  # noqa: PLC0415
 
-    watch_dir = tempfile.mkdtemp(prefix="manipula_stream_drift_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_stream_drift_ckpt_")
-    name = "drift_stream_" + uuid.uuid4().hex
-    try:
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(watch_dir, "events.parquet"),
-        )
+    with tempfile.TemporaryDirectory(
+        prefix="manipula_stream_drift_in_", ignore_cleanup_errors=True
+    ) as watch_dir:
+        link_deliveries(watch_dir, sf_dir, "events")
         counts = (
             _events_stream(spark, watch_dir)
             .groupBy(
@@ -47,20 +41,6 @@ def drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        with drain_shuffle_partitions(spark):
-            (
-                counts.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
-        sink = spark.table(name)
-        drained = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
+        with drain(counts, "complete") as (sink, _):
+            drained = spark.createDataFrame(sink.collect(), sink.schema)
     return _drift_from_counts(drained)

@@ -17,60 +17,12 @@ Spark interval-join shape.
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# serializes drains: two overlapping drains would capture each other's
-# temporary value as "old" and leave the session pinned at the drain
-# setting after both restore
-_DRAIN_LOCK = threading.Lock()
-
-
-def pin_increasing_mtimes(watch_dir: str, subdirs) -> None:
-    """Pin strictly increasing mtimes on staged delivery subdirs.
-
-    FileStreamSource orders files by modification time; back-to-back
-    writes can tie, which would reorder micro-batches and silently
-    flip any order-dependent sink (last-writer-wins upserts, index
-    builds). One shared implementation of the convention so a future
-    change (e.g. nanosecond ties) lands everywhere at once; the
-    single-file staging sites in this module and stateful.py pin the
-    same way inline at copy time.
-    """
-    import os  # noqa: PLC0415
-
-    for i, sub in enumerate(subdirs, start=1):
-        t = 1_000_000_000 + i * 100
-        for root, _dirs, files in os.walk(os.path.join(watch_dir, sub)):
-            for fn in files:
-                os.utime(os.path.join(root, fn), (t, t))
-
-
-@contextmanager
-def drain_shuffle_partitions(spark: SparkSession, n: int = 4):
-    """Scope ``spark.sql.shuffle.partitions`` down for a one-shot drain.
-
-    Each stateful operator keeps one state store PER shuffle partition
-    and commits every store every micro-batch — overhead linear in the
-    partition count, regardless of data volume. An availableNow drain
-    of a bounded snapshot wants a small fixed count (measured 2× on the
-    stream-stream join at 32→8, and a further ~0.7s at 8→4 — the
-    symmetric hash join keeps FOUR stores per partition, so the
-    commit count is 4·n·batches; below 4 the gain flattens while
-    per-partition state grows). The conf is restored on exit, so batch
-    parallelism outside the drain is untouched; streaming queries latch
-    the value at .start(), which this context encloses.
-    """
-    with _DRAIN_LOCK:
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+from .drain import drain, link_deliveries, split_deliveries
 
 # events.parquet's ts physical type has shifted between fixture
 # generations (TIMESTAMP(NANOS) in early rounds, TIMESTAMP(MICROS)
@@ -170,22 +122,13 @@ def attribution_pairs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same watched directory (no self-join restrictions), inner-joined
     on user with ``view.ts in (purchase.ts - 1h, purchase.ts]``. The
     availableNow trigger drains everything into an append-mode memory
-    sink; the result is re-hosted in a local DataFrame and every staged
-    resource (watch dir, checkpoint, sink table) is torn down.
+    sink (``drain.drain``); the result is re-hosted in a local DataFrame
+    before the watch dir and the drain's resources are torn down.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
-    watch_dir = tempfile.mkdtemp(prefix="manipula_stream_join_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_stream_join_ckpt_")
-    name = "attribution_stream_" + uuid.uuid4().hex
-    try:
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(watch_dir, "events.parquet"),
-        )
+    with tempfile.TemporaryDirectory(
+        prefix="manipula_stream_join_in_", ignore_cleanup_errors=True
+    ) as watch_dir:
+        link_deliveries(watch_dir, sf_dir, "events")
         buys = (
             _events_stream(spark, watch_dir)
             .filter(F.col("event_type") == "purchase")
@@ -219,23 +162,8 @@ def attribution_pairs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("ts_compra", "yyyy-MM-dd HH:mm:ss").alias("quando_compra"),
             F.date_format("ts_view", "yyyy-MM-dd HH:mm:ss").alias("quando_view"),
         )
-        with drain_shuffle_partitions(spark):
-            (
-                pairs.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
-        sink = spark.table(name)
-        result = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return result
+        with drain(pairs, "append") as (sink, _):
+            return spark.createDataFrame(sink.collect(), sink.schema)
 
 
 def dedup_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,18 +177,10 @@ def dedup_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     here keeps unbounded state for the one-shot availableNow pass
     (event time is TIMESTAMP_NTZ — same trade as the other drains).
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
-    watch_dir = tempfile.mkdtemp(prefix="manipula_stream_dedup_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_stream_dedup_ckpt_")
-    name = "dedup_stream_" + uuid.uuid4().hex
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        os.symlink(src, os.path.join(watch_dir, "events_delivery1.parquet"))
-        os.symlink(src, os.path.join(watch_dir, "events_delivery2.parquet"))
+    with tempfile.TemporaryDirectory(
+        prefix="manipula_stream_dedup_in_", ignore_cleanup_errors=True
+    ) as watch_dir:
+        link_deliveries(watch_dir, sf_dir, "events", copies=2)
         deduped = (
             _events_stream(spark, watch_dir)
             .dropDuplicates(["event_id"])
@@ -270,23 +190,8 @@ def dedup_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("valor_total"),
             )
         )
-        with drain_shuffle_partitions(spark):
-            (
-                deduped.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
-        sink = spark.table(name)
-        result = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return result
+        with drain(deduped, "complete") as (sink, _):
+            return spark.createDataFrame(sink.collect(), sink.schema)
 
 
 def attribution_pairs_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -297,9 +202,10 @@ def attribution_pairs_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     tests), with the result still bit-identical to the batch oracle.
 
     Mechanics: the snapshot is staged as two TIME-ORDERED deliveries
-    split three days before the end (maxFilesPerTrigger=1 → one
-    micro-batch each, so the watermark from delivery 1 evicts stale
-    view/purchase state while delivery 2 is processed). Event time is
+    split three days before the end (``drain.split_deliveries``;
+    maxFilesPerTrigger=1 → one micro-batch each, so the watermark from
+    delivery 1 evicts stale view/purchase state while delivery 2 is
+    processed). Event time is
     the session-tz-independent NUMERIC epoch-second LTZ (the
     `late_drop_drained` construction — withWatermark rejects NTZ and
     a session-tz cast would shift half-hour zones); the original NTZ
@@ -311,19 +217,13 @@ def attribution_pairs_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     (wm − 1h − delay) always reaches past the split. 10-minute
     delay; pairs identical to the un-watermarked drain.
     """
-    import glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
+    from datetime import timedelta  # noqa: PLC0415
 
     from ..sources.io import read_table  # noqa: PLC0415
 
-    watch_dir = tempfile.mkdtemp(prefix="manipula_wmjoin_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_wmjoin_ckpt_")
-    stage_dir = tempfile.mkdtemp(prefix="manipula_wmjoin_stage_")
-    name = "attribution_wm_" + uuid.uuid4().hex
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="manipula_wmjoin_in_", ignore_cleanup_errors=True
+    ) as watch_dir:
         e = read_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts"
         )
@@ -331,8 +231,6 @@ def attribution_pairs_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
         # yields the identical pair set — see the retention argument
         # above), so read max(ts) from the parquet footer stats when
         # available instead of paying a Spark aggregation job.
-        from datetime import timedelta  # noqa: PLC0415
-
         footer_max = _events_footer_max_ts(sf_dir)
         if footer_max is not None:
             split = footer_max - timedelta(days=3)
@@ -340,30 +238,9 @@ def attribution_pairs_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
             split = e.agg(
                 F.expr("max(ts) - INTERVAL 3 DAYS").alias("cut")
             ).collect()[0]["cut"]
-        # one staging job: partitionBy splits the two deliveries in a
-        # single scan (was two sequential coalesce(1) writes)
-        e.withColumn(
-            "__d", F.when(F.col("ts") < F.lit(split), 1).otherwise(2)
-        ).coalesce(1).write.partitionBy("__d").mode("overwrite").parquet(stage_dir)
-        import pyarrow as pa  # noqa: PLC0415
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
-        empty = pa.table(
-            {
-                "event_id": pa.array([], type=pa.int64()),
-                "user_id": pa.array([], type=pa.int64()),
-                "event_type": pa.array([], type=pa.string()),
-                "ts": pa.array([], type=pa.timestamp("us")),
-            }
+        split_deliveries(
+            watch_dir, e, F.when(F.col("ts") < F.lit(split), 1).otherwise(2), 2
         )
-        for i in (1, 2):
-            dst = os.path.join(watch_dir, f"delivery{i}.parquet")
-            parts = glob.glob(os.path.join(stage_dir, f"__d={i}", "part-*.parquet"))
-            if parts:
-                shutil.copyfile(parts[0], dst)
-            else:
-                pq.write_table(empty, dst)
-            os.utime(dst, (1_000_000_000 + i * 100,) * 2)
         schema = "event_id long, user_id long, event_type string, ts timestamp_ntz"
         ts_i = F.expr(
             "timestamp_seconds(timestampdiff(SECOND, TIMESTAMP '1970-01-01 00:00:00', ts))"
@@ -405,27 +282,11 @@ def attribution_pairs_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
             F.date_format("ts_compra", "yyyy-MM-dd HH:mm:ss").alias("quando_compra"),
             F.date_format("ts_view", "yyyy-MM-dd HH:mm:ss").alias("quando_view"),
         )
-        with drain_shuffle_partitions(spark):
-            q = (
-                pairs.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-            )
-            q.awaitTermination()
-        removed = sum(
-            so.get("numRowsRemoved", 0)
-            for p in q.recentProgress
-            for so in p.get("stateOperators", [])
-        )
-        sink = spark.table(name)
-        result = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-        shutil.rmtree(stage_dir, ignore_errors=True)
-    attribution_pairs_watermarked.last_removed = removed  # test hook
+        with drain(pairs, "append") as (sink, progress):
+            result = spark.createDataFrame(sink.collect(), sink.schema)
+    attribution_pairs_watermarked.last_removed = sum(  # test hook
+        so.get("numRowsRemoved", 0)
+        for p in progress
+        for so in p.get("stateOperators", [])
+    )
     return result

@@ -17,11 +17,15 @@ trade as every other drain in this package).
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.formatting import dsum
-from .joins import _events_stream, drain_shuffle_partitions
+from ..operators.spool import spool
+from .drain import drain, link_deliveries
+from .joins import _events_stream
 
 
 def sessionize_stream(spark: SparkSession, sf_dir: str, gap: str = "30 minutes") -> DataFrame:
@@ -32,19 +36,10 @@ def sessionize_stream(spark: SparkSession, sf_dir: str, gap: str = "30 minutes")
     oracle — the streaming plan must MERGE partial sessions across
     micro-batches to match it, which is exactly what this exercises.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
-    watch_dir = tempfile.mkdtemp(prefix="manipula_stream_sess_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_stream_sess_ckpt_")
-    name = "sessionize_stream_" + uuid.uuid4().hex
-    try:
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(watch_dir, "events.parquet"),
-        )
+    with tempfile.TemporaryDirectory(
+        prefix="manipula_stream_sess_in_", ignore_cleanup_errors=True
+    ) as watch_dir:
+        link_deliveries(watch_dir, sf_dir, "events")
         agg = (
             _events_stream(spark, watch_dir)
             .groupBy(
@@ -59,24 +54,8 @@ def sessionize_stream(spark: SparkSession, sf_dir: str, gap: str = "30 minutes")
             )
         )
         out = agg.select("usuario", "inicio", "fim", "n_eventos", "valor_total")
-        with drain_shuffle_partitions(spark):
-            (
-                out.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
-        # ~95k session rows at sf0.1: spool executor-side instead of
-        # collect+createDataFrame, which round-trips every row through
-        # the driver twice (py4j out, py4j back in)
-        from ..operators.spool import spool  # noqa: PLC0415
-
-        result = spool(spark.table(name))
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return result
+        with drain(out, "complete") as (sink, _):
+            # ~95k session rows at sf0.1: spool executor-side instead of
+            # collect+createDataFrame, which round-trips every row through
+            # the driver twice (py4j out, py4j back in)
+            return spool(sink)

@@ -15,7 +15,11 @@ O(history).
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame
+
+from .drain import drain, link_deliveries, split_deliveries
 
 OUTPUT_SCHEMA = "key string, n long, total double"
 # state carries exact integer cents — a double field here would silently
@@ -70,23 +74,13 @@ def running_totals_drained(spark, sf_dir: str) -> DataFrame:
     aggregate — which is what the DuckDB oracle computes, making the
     cross-batch state arithmetic hash-verified.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from pyspark.sql import functions as F  # noqa: PLC0415
     from pyspark.sql import Window  # noqa: PLC0415
 
-    from .joins import drain_shuffle_partitions  # noqa: PLC0415
-
-    watch_dir = tempfile.mkdtemp(prefix="manipula_stateful_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_stateful_ckpt_")
-    name = "running_totals_" + uuid.uuid4().hex
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        os.symlink(src, os.path.join(watch_dir, "delivery1.parquet"))
-        os.symlink(src, os.path.join(watch_dir, "delivery2.parquet"))
+    with tempfile.TemporaryDirectory(
+        prefix="manipula_stateful_in_", ignore_cleanup_errors=True
+    ) as watch_dir:
+        link_deliveries(watch_dir, sf_dir, "events", copies=2)
         # partial schema: only the two columns the operator touches —
         # sidesteps the fixture's variable ts unit entirely, and
         # maxFilesPerTrigger=1 forces one micro-batch PER delivery so
@@ -97,22 +91,8 @@ def running_totals_drained(spark, sf_dir: str) -> DataFrame:
             .parquet(watch_dir)
         )
         totals = running_totals_stream(stream, "event_type", "value")
-        with drain_shuffle_partitions(spark):
-            (
-                totals.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
-        sink = spark.table(name)
-        emitted = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
+        with drain(totals, "update") as (sink, _):
+            emitted = spark.createDataFrame(sink.collect(), sink.schema)
     w = Window.partitionBy("key").orderBy(F.col("n").desc())
     return (
         emitted.withColumn("__rn", F.row_number().over(w))
@@ -148,25 +128,17 @@ def late_drop_drained(spark, sf_dir: str) -> DataFrame:
     oracle replays the finalization rule; the cross-batch ACCEPT
     path is `stream_running_totals`' job.
 
-    The three deliveries are real parquet files with forced mtime
-    order (maxFilesPerTrigger=1 → one micro-batch each).
+    The three deliveries are real parquet files with pinned mtime
+    order (``drain.split_deliveries``; maxFilesPerTrigger=1 → one
+    micro-batch each).
     """
-    import glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     from ..sources.io import read_table  # noqa: PLC0415
-    from .joins import drain_shuffle_partitions  # noqa: PLC0415
 
-    watch_dir = tempfile.mkdtemp(prefix="manipula_late_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_late_ckpt_")
-    stage_dir = tempfile.mkdtemp(prefix="manipula_late_stage_")
-    name = "late_drop_" + uuid.uuid4().hex
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="manipula_late_in_", ignore_cleanup_errors=True
+    ) as watch_dir:
         e = read_table(spark, sf_dir, "events").select("event_id", "ts")
         is_late = (
             F.conv(
@@ -181,32 +153,9 @@ def late_drop_drained(spark, sf_dir: str) -> DataFrame:
             % 8
             == 0
         )
-        # ONE staging job: partitionBy splits on-time (d=1) and late
-        # (d=3) in a single scan (was 3 sequential coalesce(1) writes,
-        # ~0.3s saved warm); the empty d=2 heartbeat needs no Spark job
-        # at all — an empty parquet footer with the matching physical
-        # schema (int64 + MICROS-NTZ, what Spark writes for
-        # timestamp_ntz) is written driver-side.
-        e.withColumn("__d", F.when(is_late, 3).otherwise(1)).coalesce(
-            1
-        ).write.partitionBy("__d").mode("overwrite").parquet(stage_dir)
-        import pyarrow as pa  # noqa: PLC0415
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
-        empty = pa.table(
-            {
-                "event_id": pa.array([], type=pa.int64()),
-                "ts": pa.array([], type=pa.timestamp("us")),
-            }
-        )
-        for i in (1, 2, 3):
-            dst = os.path.join(watch_dir, f"delivery{i}.parquet")
-            parts = glob.glob(os.path.join(stage_dir, f"__d={i}", "part-*.parquet"))
-            if parts:
-                shutil.copyfile(parts[0], dst)
-            else:
-                pq.write_table(empty, dst)
-            os.utime(dst, (1_000_000_000 + i * 100, 1_000_000_000 + i * 100))
+        # on-time rows are delivery 1 and late rows delivery 3; no row
+        # maps to 2, so it is staged as the empty heartbeat
+        split_deliveries(watch_dir, e, F.when(is_late, 3).otherwise(1), 3)
         stream = spark.readStream.schema("event_id long, ts timestamp_ntz").option(
             "maxFilesPerTrigger", 1
         ).parquet(watch_dir)
@@ -235,27 +184,11 @@ def late_drop_drained(spark, sf_dir: str) -> DataFrame:
                 "n",
             )
         )
-        with drain_shuffle_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-            )
-            q.awaitTermination()
-        dropped = sum(
-            p["stateOperators"][0].get("numRowsDroppedByWatermark", 0)
-            for p in q.recentProgress
-        )
-        sink = spark.table(name)
-        emitted = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        with drain(agg, "append") as (sink, progress):
+            emitted = spark.createDataFrame(sink.collect(), sink.schema)
+    dropped = sum(
+        p["stateOperators"][0].get("numRowsDroppedByWatermark", 0) for p in progress
+    )
     late_drop_drained.last_dropped = dropped  # test hook: the real drop count
     return emitted.select("janela", F.col("n").cast("long").alias("n")).orderBy(
         "janela"

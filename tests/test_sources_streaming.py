@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pandas as pd
+import pytest
 
 from manipula_o_de_dataframes_spark.sources.io import read_ordered_snapshots
+from manipula_o_de_dataframes_spark.streaming.drain import drain
 from manipula_o_de_dataframes_spark.streaming.pending_stream import (
     pending_stream,
     run_available_now,
@@ -56,14 +61,59 @@ def test_pending_stream_available_now(spark, tmp_path):
     )
     result = pending_stream(spark, str(src), schema)
     seen: list = []
-    spark.conf.set(
-        "spark.sql.streaming.checkpointLocation", str(tmp_path / "ckpt")
-    )
     run_available_now(result, lambda df, epoch: seen.extend(df.collect()))
     assert seen, "stream produced no batches"
     total = sum(r["n_pendentes"] for r in seen)
     assert total == 2  # only the two PENDENTE rows
     assert all(r["snapshot"] == "snap1.parquet" for r in seen)
+
+
+@pytest.mark.parametrize("case", ["memory", "foreach_batch", "raises", "kept_checkpoint"])
+def test_drain_runs_once_and_leaves_nothing_behind(spark, tmp_path, monkeypatch, case):
+    """``drain`` on a tiny staged feed: the memory sink and a
+    foreachBatch sink see every row; a raising foreachBatch propagates.
+    Afterwards, in every case, no stream is active, no drain table is
+    left in the catalog, the scratch checkpoint is gone (a checkpoint
+    the caller passed is kept) and the shuffle-partition count is back
+    to what it was."""
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    pd.DataFrame({"k": ["a", "b", "a"], "v": [1, 2, 3]}).to_parquet(feed / "d1.parquet")
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    stream = spark.readStream.schema("k string, v long").parquet(str(feed))
+    seen: list = []
+
+    if case == "memory":
+        counts = stream.groupBy("k").agg({"v": "sum"})
+        with drain(counts, "complete") as (sink, progress):
+            assert sorted(map(tuple, sink.collect())) == [("a", 4), ("b", 2)]
+            assert progress and progress[-1]["numInputRows"] == 3
+            assert [t for t in spark.catalog.listTables() if t.name.startswith("drain_")]
+    elif case == "foreach_batch":
+        with drain(stream, foreach_batch=lambda b, _id: seen.extend(b.collect())) as (sink, _):
+            assert sink is None
+        assert sorted(r["v"] for r in seen) == [1, 2, 3]
+    elif case == "raises":
+        def boom(batch, batch_id):
+            raise ValueError("sink failed on purpose")
+
+        with pytest.raises(Exception, match="sink failed on purpose"):
+            with drain(stream, foreach_batch=boom):
+                pass
+    else:
+        kept = tmp_path / "ckpt"
+        with drain(stream, foreach_batch=lambda b, _id: seen.extend(b.collect()), checkpoint=str(kept)):
+            pass
+        assert len(seen) == 3
+        assert (kept / "commits").is_dir()
+
+    assert not spark.streams.active
+    assert not [t for t in spark.catalog.listTables() if t.name.startswith("drain_")]
+    assert os.listdir(scratch) == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prior
 
 
 def test_excel_roundtrip_write_then_read(spark, tmp_path):

@@ -42,8 +42,10 @@ def main() -> None:
     def materialize(df) -> None:
         df.write.mode("overwrite").format("noop").save()
 
-    materialize(QUERIES["abc_classification"](spark, "/root/testdata/sf0.001"))
-    materialize(QUERIES["multimodal_features"](spark, "/root/testdata/sf0.001"))
+    # untimed warm-up on the measured directory pays JVM/codegen once; a
+    # missing sf_dir fails here instead of warming up on another fixture
+    materialize(QUERIES["abc_classification"](spark, sf_dir))
+    materialize(QUERIES["multimodal_features"](spark, sf_dir))
     for build in ARTIFACTS.values():
         build(spark, sf_dir)
 
